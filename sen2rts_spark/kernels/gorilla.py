@@ -7,8 +7,21 @@ Deterministic byte encoding of one (timestamps, values) series:
 - values: XOR with previous; '0' if identical, else '1' + ('0' reuse previous
   leading/meaningful window | '1' + 6b leading + 6b meaningful-length) + bits
 
-decode(encode(ts, v)) == (ts, v) bit-exact — property-tested. Used as the
-blob payload of the rollup sink (one blob per (url, bucket_start, tier)).
+Blob layout: ``GTS1`` magic, u32 point count, i64 first timestamp, u64 first
+value bits, then the token stream padded to a whole byte. It is the payload
+of the rollup sink (one blob per (id, chunk)) and of compaction.
+
+One encoder, :func:`gorilla_encode_multi`, writes every blob: it encodes a
+whole Arrow batch of groups in one vectorized pass, so numpy's fixed
+dispatch cost is paid per batch, not per blob. :func:`gorilla_encode` is
+the one-series wrapper over it. Two decoders read blobs:
+:func:`gorilla_decode` (one blob; the tests' reference and the path for
+blobs over ``_MULTI_MAX_POINTS``) and :func:`gorilla_decode_multi` (a batch
+of blobs in lockstep). Both follow the control bits, so they read any
+valid Gorilla window policy. decode(encode(ts, v)) == (ts, v) bit-exact,
+NaN payloads included (property-tested), and the stored bytes are pinned
+by sha256 digests (tests/test_gorilla_golden.py).
+
 The reference has no compressed storage (SURVEY.md §2.1 S4); this implements
 the north rule's storage format from the public paper.
 """
@@ -30,36 +43,9 @@ _MAGIC = b"GTS1"
 # so the multi path stays lockstep in the supported pipeline).
 _MULTI_MAX_POINTS = 8192
 
-
-class _BitWriter:
-    """Accumulates bits MSB-first, flushing whole bytes to a bytearray.
-
-    Keeping the accumulator bounded (< 8 bits after each write) makes the
-    writer O(total_bits): a single growing big-int accumulator costs
-    O(total_bits) PER WRITE (every shift copies the whole integer), which is
-    quadratic and dominates encode time for multi-KB blobs.
-    """
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int):
-        acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        nbits = self.nbits + bits
-        while nbits >= 8:
-            nbits -= 8
-            self.buf.append((acc >> nbits) & 0xFF)
-        self.acc = acc & ((1 << nbits) - 1)
-        self.nbits = nbits
-
-    def getvalue(self) -> bytes:
-        out = bytes(self.buf)
-        if self.nbits:
-            out += bytes([(self.acc << ((-self.nbits) % 8)) & 0xFF])
-        return out
+# gorilla_decode walks the value stream per point below this count and
+# run-batches it above (numpy's fixed cost dominates short streams).
+_VEC_DECODE_MIN = 192
 
 
 class _BitReader:
@@ -79,10 +65,6 @@ class _BitReader:
         return (chunk >> tail) & ((1 << bits) - 1)
 
 
-def _clz64(x: int) -> int:
-    return 64 - x.bit_length() if x else 64
-
-
 def _bitlen64(x: np.ndarray) -> np.ndarray:
     """Vectorized int.bit_length for uint64 arrays (0 → 0).
 
@@ -99,8 +81,16 @@ def _bitlen64(x: np.ndarray) -> np.ndarray:
     return np.maximum(np.maximum(blh, bll), 0.0).astype(np.int64)
 
 
-def _pack_tokens_buf(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """_pack_tokens returning the uint8 buffer (no bytes copy)."""
+def _pack_tokens(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
+    """Pack variable-width bit tokens (each <= 32 bits) MSB-first into a
+    uint8 buffer.
+
+    Vectorized: cumulative bit offsets place every token; each token is
+    left-shifted to its byte-aligned end and OR-merged byte-wise into the
+    buffer (np.bitwise_or.at handles boundary bytes shared by two tokens).
+    A shifted token spans <= ceil((32+7)/8) = 5 bytes. Zero-width tokens
+    are inert (they advance no bits and write no bytes).
+    """
     widths64 = widths.astype(np.int64)
     end = np.cumsum(widths64)
     total = int(end[-1]) if len(end) else 0
@@ -122,171 +112,14 @@ def _pack_tokens_buf(vals: np.ndarray, widths: np.ndarray) -> np.ndarray:
     return buf
 
 
-def _pack_tokens(vals: np.ndarray, widths: np.ndarray) -> bytes:
-    """Pack variable-width bit tokens (each <= 32 bits) MSB-first.
-
-    Vectorized: cumulative bit offsets place every token; each token is
-    left-shifted to its byte-aligned end and OR-merged byte-wise into the
-    buffer (np.bitwise_or.at handles boundary bytes shared by two tokens).
-    A shifted token spans <= ceil((32+7)/8) = 5 bytes. Zero-width tokens
-    are inert (they advance no bits and write no bytes), so callers may
-    leave unused slots in place instead of filtering.
-    """
-    return _pack_tokens_buf(vals, widths).tobytes()
-
-
-# Below this length the ~0.4 ms fixed cost of the vectorized path (25+
-# numpy dispatches on tiny arrays) exceeds the per-point loop entirely;
-# measured crossover ~150 points on this host.
-_SMALL_N = 192
-
-
-def _encode_small(header: bytes, ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Per-point encode loop — faster than the vectorized path for short
-    series (daily-tier blobs are often < 100 points at fine chunking).
-    Value windows use the paper's shrink-fit reuse; the decoder is policy-
-    agnostic (it follows the control bits), so the two paths interoperate."""
-    w = _BitWriter()
-    deltas = np.diff(ts)
-    dods = np.diff(np.concatenate(([np.int64(0)], deltas)))
-    for dod in dods.tolist():
-        if dod == 0:
-            w.write(0, 1)
-        elif -63 <= dod <= 64:
-            w.write(0b10, 2)
-            w.write(dod + 63, 7)
-        elif -255 <= dod <= 256:
-            w.write(0b110, 3)
-            w.write(dod + 255, 9)
-        elif -2047 <= dod <= 2048:
-            w.write(0b1110, 4)
-            w.write(dod + 2047, 12)
-        else:
-            w.write(0b1111, 4)
-            w.write(dod & ((1 << 64) - 1), 64)
-    bits = values.view(np.uint64)
-    xors = (bits[1:] ^ bits[:-1]).tolist()
-    # blob-global window (same policy as the vectorized path — see
-    # gorilla_encode docstring): one pre-pass finds the tightest window
-    # covering every nonzero XOR, the stream is then one '11' + N×'10'.
-    lead_g, trail_g = 64, 64
-    for x in xors:
-        if x:
-            lead = _clz64(x)
-            lead_g = min(lead_g, 31 if lead > 31 else lead)
-            trail_g = min(trail_g, (x & -x).bit_length() - 1)
-    mean_g = 64 - lead_g - trail_g
-    first = True
-    for x in xors:
-        if x == 0:
-            w.write(0, 1)
-            continue
-        if first:
-            w.write(0b11, 2)
-            w.write(lead_g, 6)
-            w.write(mean_g - 1, 6)  # 1..64 stored as 0..63
-            first = False
-        else:
-            w.write(0b10, 2)
-        w.write(x >> trail_g, mean_g)
-    return header + w.getvalue()
-
-
 def gorilla_encode(ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode int64 timestamps (sorted) + float64 values into a Gorilla blob.
-
-    Long series: fully vectorized (no per-point Python) — delta-of-delta
-    classes via np.select, XOR lead/trail via vectorized bit-length, one
-    variable-width token pack at the end. The value-window policy there is
-    'reuse iff (lead, trail) exactly match the previous nonzero XOR' —
-    unlike the paper's shrink-fit rule this is expressible as a vector
-    compare (no sequential window state); any policy is valid Gorilla, the
-    decoder follows the control bits (paper §4.1.2 explicitly leaves the
-    reuse heuristic to the encoder). Short series (< _SMALL_N) dispatch to
-    the per-point loop, which beats numpy's fixed dispatch cost there.
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    values = np.asarray(values, dtype=np.float64)
-    n = len(ts)
-    if len(values) != n:
-        raise ValueError(
-            f"ts/values length mismatch: {n} vs {len(values)}")
-    header = _MAGIC + struct.pack(">I", n)
-    if n == 0:
-        return header
-    header += struct.pack(">q", int(ts[0]))
-    header += struct.pack(">Q", int(values[:1].view(np.uint64)[0]))
-    if n == 1:
-        return header
-    if n < _SMALL_N:
-        return _encode_small(header, ts, values)
-
-    m = n - 1
-    # ---- timestamp tokens: dod class prefix + payload (64b split 32+32)
-    deltas = np.diff(ts)
-    dods = np.empty(m, dtype=np.int64)
-    dods[0] = deltas[0]
-    np.subtract(deltas[1:], deltas[:-1], out=dods[1:])
-    cls = np.select(
-        [dods == 0,
-         (dods >= -63) & (dods <= 64),
-         (dods >= -255) & (dods <= 256),
-         (dods >= -2047) & (dods <= 2048)],
-        [0, 1, 2, 3], default=4)
-    du = dods.view(np.uint64)  # two's complement bits
-    tv = np.zeros((m, 3), dtype=np.uint64)
-    tw = np.zeros((m, 3), dtype=np.uint8)
-    tv[:, 0] = np.array([0b0, 0b10, 0b110, 0b1110, 0b1111],
-                        dtype=np.uint64)[cls]
-    tw[:, 0] = np.array([1, 2, 3, 4, 4], dtype=np.uint8)[cls]
-    # biased payloads wrap correctly in two's-complement uint64 arithmetic
-    tv[:, 1] = np.select(
-        [cls == 1, cls == 2, cls == 3, cls == 4],
-        [(du + np.uint64(63)) & np.uint64(0x7F),
-         (du + np.uint64(255)) & np.uint64(0x1FF),
-         (du + np.uint64(2047)) & np.uint64(0xFFF),
-         du >> np.uint64(32)],
-        default=np.uint64(0))
-    tw[:, 1] = np.array([0, 7, 9, 12, 32], dtype=np.uint8)[cls]
-    tv[:, 2] = du & np.uint64(0xFFFFFFFF)
-    tw[:, 2] = np.where(cls == 4, 32, 0).astype(np.uint8)
-
-    # ---- value tokens: blob-global window (one '11' header, then '10'
-    # reuse for every later nonzero XOR). The window is the tightest
-    # (lead, trail) covering ALL nonzero XORs, so every payload fits by
-    # construction. Chosen over the paper's shrink-fit because the decoder
-    # can then batch the whole value stream as fixed-width tokens
-    # (_decode_values_vec) — any window policy is valid Gorilla, the
-    # decoder follows the control bits (paper §4.1.2).
-    bits = values.view(np.uint64)
-    xors = bits[1:] ^ bits[:-1]
-    nz = xors != 0
-    idxnz = np.flatnonzero(nz)
-    vv = np.zeros((m, 4), dtype=np.uint64)
-    vw = np.zeros((m, 4), dtype=np.uint8)
-    vw[:, 0] = np.where(nz, 2, 1).astype(np.uint8)
-    if len(idxnz):
-        xnz = xors[idxnz]
-        bl = _bitlen64(xnz)
-        lead_g = int(min(int(np.min(64 - bl)), 31))  # 6b lead field cap
-        low = xnz & (~xnz + np.uint64(1))            # x & -x
-        trail_g = int(np.min(_bitlen64(low))) - 1
-        mean_g = 64 - lead_g - trail_g
-        first = idxnz[0]
-        vv[nz, 0] = np.uint64(0b10)
-        vv[first, 0] = np.uint64(0b11)
-        vw[first, 1] = 12
-        vv[first, 1] = np.uint64((lead_g << 6) | (mean_g - 1))
-        mb = xors >> np.uint64(trail_g)     # fits in mean_g bits by design
-        vw[nz, 2] = max(mean_g - 32, 0)
-        vv[:, 2] = mb >> np.uint64(32)
-        vw[nz, 3] = min(mean_g, 32)
-        vv[:, 3] = mb & np.uint64(0xFFFFFFFF)
-
-    allw = np.concatenate([tw.ravel(), vw.ravel()])
-    allv = np.concatenate([tv.ravel(), vv.ravel()])
-    used = allw > 0
-    return header + _pack_tokens(allv[used], allw[used])
+    """Encode int64 timestamps (sorted) + float64 values into one blob:
+    :func:`gorilla_encode_multi` over a single group. An empty series is
+    the bare 8-byte header."""
+    if len(ts) == 0 and len(values) == 0:
+        return _MAGIC + struct.pack(">I", 0)
+    data, _ = gorilla_encode_multi(ts, values, [0])
+    return data.tobytes()
 
 
 def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
@@ -299,15 +132,18 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     ``data[offsets[g]:offsets[g+1]]`` (uint8 array / int64 offsets), each
     decodable by :func:`gorilla_decode`.
 
-    Token policy is gorilla_encode's blob-global value window applied per
-    group, so output is byte-identical to ``gorilla_encode(group)`` for
-    groups >= _SMALL_N; short groups get the same (valid) policy instead of
-    the scalar path's shrink-fit — the decoder follows control bits either
-    way. The point of this entry is the sink hot path: the ~25-dispatch
-    numpy fixed cost that made per-blob encode ~0.4 ms is paid once per
-    *batch* here — dod classes, XOR windows (per-group minimum.reduceat),
-    and ONE global bit-pack with a <=7-bit per-group alignment pad so every
-    blob starts byte-aligned in the shared buffer. No per-group Python.
+    Value-window policy: one window per blob, the tightest (lead, trail)
+    covering ALL of the group's nonzero XORs, so the stream is one '11'
+    header then '10' reuse for every later nonzero XOR and every payload
+    fits by construction. Any window policy is valid Gorilla (paper §4.1.2
+    leaves the reuse heuristic to the encoder; decoders follow the control
+    bits); this one needs no sequential window state, so it vectorizes,
+    and it lets the decoders batch the value stream as fixed-width tokens.
+
+    The ~25 numpy dispatches of fixed cost are paid once per call: dod
+    classes, XOR windows (per-group minimum.reduceat), and ONE global
+    bit-pack with a <=7-bit per-group alignment pad so every blob starts
+    byte-aligned in the shared buffer. No per-group Python.
     """
     ts = np.ascontiguousarray(ts, dtype=np.int64)
     values = np.ascontiguousarray(values, dtype=np.float64)
@@ -334,7 +170,7 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     tokstart = np.concatenate(([0], np.cumsum(ms)[:-1]))
     k = np.arange(T) - tokstart[gid]         # local token index (0 = 2nd pt)
 
-    # ---- timestamp tokens (same classes as gorilla_encode)
+    # ---- timestamp tokens: dod class prefix + payload (64b split 32+32)
     if T:
         deltas = ts[tokidx] - ts[tokidx - 1]
         dods = np.empty(T, dtype=np.int64)
@@ -370,7 +206,7 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     tv[:, 2] = np.where(cls == 4, du & np.uint64(0xFFFFFFFF), np.uint64(0))
     tw[:, 2] = np.where(cls == 4, 32, 0).astype(np.uint8)
 
-    # ---- value tokens: per-group global window via segment reductions
+    # ---- value tokens: per-group window via segment reductions
     xors = bits[tokidx] ^ bits[tokidx - 1] if T else np.zeros(0, np.uint64)
     nz = xors != 0
     bl = _bitlen64(xors)                     # 0 where xor == 0
@@ -437,7 +273,7 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     # zero-width slots contribute no bits — drop them before the pack
     # (3.4x fewer elements: ~2.1 real tokens per point vs 7 slots)
     used = allw > 0
-    buf = _pack_tokens_buf(allv[used], allw[used])
+    buf = _pack_tokens(allv[used], allw[used])
 
     # ---- assemble [24B header | token bytes] per group in one buffer
     tokbytes = (bits_g + pad_w) >> 3
@@ -448,7 +284,7 @@ def gorilla_encode_multi(ts: np.ndarray, values: np.ndarray,
     hdr[:, :4] = np.frombuffer(_MAGIC, dtype=np.uint8)
     if int(ns.max(initial=0)) >= 2 ** 32:
         raise ValueError("group size >= 2**32 does not fit the u32 header "
-                         "count (matches gorilla_encode's struct.pack('>I'))")
+                         "count")
     hdr[:, 4:8] = ns.astype(">u4").view(np.uint8).reshape(G, 4)
     hdr[:, 8:16] = ts[starts].astype(">i8").view(np.uint8).reshape(G, 8)
     hdr[:, 16:24] = bits[starts].astype(">u8").view(np.uint8).reshape(G, 8)
@@ -560,9 +396,9 @@ def gorilla_decode(blob: bytes):
     _decode_ts_slow(r, ts, 1, 0)
 
     # value stream: small blobs → scalar walk (numpy fixed costs dominate
-    # under ~_SMALL_N points); large blobs → run-batched vectorized decode
+    # under ~_VEC_DECODE_MIN points); large blobs → run-batched vectorized decode
     data = bytes(r.data) + b"\x00" * 16  # pad: end-of-stream peeks read full width
-    if n < _SMALL_N:
+    if n < _VEC_DECODE_MIN:
         _decode_values_scalar(data, r.pos, vals_bits, 1, int(v0_bits), 65, 0)
     else:
         _decode_values_vec(data, r.pos, vals_bits, n)
@@ -733,9 +569,9 @@ def _decode_values_vec(data: bytes, pos: int, out: np.ndarray, n: int):
 # ---------------------------------------------------------------------------
 # Cross-blob vectorized decode. gorilla_decode costs ~100 us of FIXED
 # Python/numpy overhead per blob (reader objects, buffer pads, per-point
-# scalar walks under _SMALL_N) — at tier-blob sizes of ~40-200 points the
-# overhead IS the decode (measured 0.35 Mpts/s single-thread over the
-# sf0.1 blob table). The multi decoder amortizes it across every blob of
+# scalar walks under _VEC_DECODE_MIN) — at tier-blob sizes of ~40-200
+# points the overhead IS the decode (measured 0.35 Mpts/s single-thread
+# over the sf0.1 blob table). The multi decoder amortizes it across every blob of
 # an Arrow batch: per-blob headers parse as strided vector ops, and the
 # token streams advance in LOCKSTEP — each loop iteration decodes ONE
 # token for EVERY still-active blob with ~40 vector ops, so Python

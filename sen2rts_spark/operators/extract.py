@@ -78,10 +78,13 @@ def extract_obs(pages: DataFrame, fun: str = "mean",
         F.regexp_extract("text_x", r"source=(\S+)", 1).alias("orbit"),
         F.regexp_extract("text_x", r"sensor=(\S+)", 1).alias("sensor"),
         F.regexp_extract("text_x", r"ndvi=([-0-9.,eE]+)", 1).alias("metric_s"),
-        F.regexp_extract("text_x", r"class=(\d+)", 1).cast("int").alias("qclass"),
-        F.regexp_extract("text_x", r"cld=(\d+)", 1).cast("int").alias("cld"),
+        # try_cast: a field that is missing or does not parse extracts as
+        # '' and becomes NULL (an ANSI cast would fail the whole job);
+        # pages whose metric is NULL drop out at `value IS NOT NULL`
+        F.regexp_extract("text_x", r"class=(\d+)", 1).try_cast("int").alias("qclass"),
+        F.regexp_extract("text_x", r"cld=(\d+)", 1).try_cast("int").alias("cld"),
     ).withColumn(
-        "value0", F.regexp_replace("metric_s", ",", "").cast("double")
+        "value0", F.regexp_replace("metric_s", ",", "").try_cast("double")
     ).withColumn(
         "w", combine_weights(scl_weight(F.col("qclass")), cld_weight(F.col("cld")))
     )

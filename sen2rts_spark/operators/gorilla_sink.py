@@ -15,7 +15,8 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode
+from ..kernels.gorilla import gorilla_decode_multi, gorilla_encode_multi
+from ..session import task_partitions
 
 __all__ = ["encode_blobs", "decode_blobs", "decode_blobs_agg", "BLOB_SCHEMA"]
 
@@ -24,21 +25,21 @@ BLOB_SCHEMA = ("id string, tier string, chunk_start timestamp, blob binary, "
 
 
 def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
-                 num_partitions: int | None = None,
                  clustered: bool = False) -> DataFrame:
     """Rollup tier → one Gorilla blob per (id, chunk_days window).
 
     Hash-partitioned on (id, chunk), sorted within partitions, then a single
-    mapInPandas pass walks group runs on raw numpy arrays — no per-group
-    pandas objects, one Arrow batch out per batch in (the applyInPandas
-    per-group dispatch was ~15x slower at 3000 series, see operators/grouped.py).
+    mapInArrow pass regroups each partition's Arrow batches into whole
+    (id, chunk) groups (``_whole_groups``) and encodes every group of a
+    batch in ONE ``gorilla_encode_multi`` call — no per-group Python, one
+    Arrow batch out per batch in.
 
     Contract: ``value`` must be non-NaN — the write job fails loudly on NaN
-    (since r6) because NaN silently diverges the ``decode_blobs_agg``
-    aggregate pushdown (numpy reductions propagate NaN) from the
-    decode+groupBy plan (Spark orders NaN largest). Rollup tiers are
-    count>0 means over raw observations, so NaN never occurs in the
-    supported pipeline; callers feeding arbitrary series must filter first.
+    because NaN silently diverges the ``decode_blobs_agg`` aggregate
+    pushdown (numpy reductions propagate NaN) from the decode+groupBy plan
+    (Spark orders NaN largest). Rollup tiers are count>0 means over raw
+    observations, so NaN never occurs in the supported pipeline; callers
+    feeding arbitrary series must filter first.
 
     ``clustered=True``: the caller guarantees ``tier_df`` is already
     hash-partitioned on ``id`` (e.g. via rollup_raw/extract_obs
@@ -54,87 +55,96 @@ def encode_blobs(tier_df: DataFrame, tier: str, chunk_days: int = 366,
         "chunk", F.window("bucket_start", f"{chunk_secs} seconds")["start"])
     arranged = with_chunk.select("id", "chunk", "bucket_start", "value")
     if not clustered:
-        # 3 tasks/core (standard sizing): a straggling core delays the stage
-        # by ~1/3 task instead of a whole partition's worth of work
-        parts = num_partitions or \
-            3 * tier_df.sparkSession.sparkContext.defaultParallelism
-        arranged = arranged.repartition(parts, "id", "chunk")
+        arranged = arranged.repartition(task_partitions(tier_df.sparkSession),
+                                        "id", "chunk")
     arranged = arranged.sortWithinPartitions("id", "chunk", "bucket_start")
 
-    import pyarrow as pa
-
-    out_type = pa.schema([
-        ("id", pa.string()), ("tier", pa.string()),
-        ("chunk_start", pa.timestamp("us")), ("blob", pa.binary()),
-        ("count", pa.int32()), ("min_ts", pa.timestamp("us")),
-        ("max_ts", pa.timestamp("us")),
-    ])
-
-    def _stream(batches):
-        # mapInArrow: zero-copy numpy views of the Arrow columns — the
-        # Arrow→pandas conversion alone cost ~1 s per 150k-row task
-        carry = None  # (ids, chunks_us, ts_us, vals) numpy arrays
-        def emit(ids, chunks, ts_us, vals, hold_last):
-            n = len(ids)
-            change = np.concatenate(
-                ([True], (ids[1:] != ids[:-1]) | (chunks[1:] != chunks[:-1])))
-            starts = np.flatnonzero(change)
-            ends = np.concatenate((starts[1:], [n]))
-            stop = len(starts) - 1 if hold_last else len(starts)
-            cols = {"id": [], "chunk_start": [], "blob": [], "count": [],
-                    "min_ts": [], "max_ts": []}
-            for k in range(stop):
-                s, e = starts[k], ends[k]
-                cols["id"].append(ids[s])
-                cols["chunk_start"].append(int(chunks[s]))
-                cols["blob"].append(gorilla_encode(ts_us[s:e] // 1_000_000,
-                                                   vals[s:e]))
-                cols["count"].append(int(e - s))
-                cols["min_ts"].append(int(ts_us[s]))
-                cols["max_ts"].append(int(ts_us[e - 1]))
-            rest = (ids[starts[-1]:], chunks[starts[-1]:],
-                    ts_us[starts[-1]:], vals[starts[-1]:]) if hold_last else None
-            if not cols["id"]:
-                return None, rest
-            rb = pa.record_batch([
-                pa.array(cols["id"], pa.string()),
-                pa.array([tier] * len(cols["id"]), pa.string()),
-                pa.array(cols["chunk_start"], pa.timestamp("us")),
-                pa.array(cols["blob"], pa.binary()),
-                pa.array(cols["count"], pa.int32()),
-                pa.array(cols["min_ts"], pa.timestamp("us")),
-                pa.array(cols["max_ts"], pa.timestamp("us")),
-            ], schema=out_type)
-            return rb, rest
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0).to_numpy(zero_copy_only=False))
-            chunks = np.asarray(batch.column(1).cast(pa.int64()).to_numpy())
-            ts_us = np.asarray(batch.column(2).cast(pa.int64()).to_numpy())
-            vals = np.asarray(batch.column(3).to_numpy(zero_copy_only=False),
-                              dtype=np.float64)
+    def _encode(batches):
+        import pyarrow as pa
+        for batch, starts in _whole_groups(batches, ["id", "chunk"]):
+            vals = batch.column(3).to_numpy(zero_copy_only=False)
             if np.isnan(vals).any():
                 # NaN would silently diverge the decode_blobs_agg pushdown
                 # from the decode+groupBy plan (numpy reductions propagate
                 # NaN, Spark orders it largest) — fail loudly at write time
                 raise ValueError("NaN value in rollup tier; the Gorilla "
                                  "sink stores non-NaN series only")
-            if carry is not None:
-                ids = np.concatenate([carry[0], ids])
-                chunks = np.concatenate([carry[1], chunks])
-                ts_us = np.concatenate([carry[2], ts_us])
-                vals = np.concatenate([carry[3], vals])
-            rb, carry = emit(ids, chunks, ts_us, vals, hold_last=True)
-            if rb is not None:
-                yield rb
-        if carry is not None and len(carry[0]):
-            rb, _ = emit(*carry, hold_last=False)
-            if rb is not None:
-                yield rb
+            first = pa.array(starts)
+            yield _blob_batch(
+                batch.column(0).take(first),
+                pa.array([tier] * len(starts), pa.string()),
+                batch.column(1).take(first),
+                batch.column(2).cast(pa.int64()).to_numpy(), vals, starts)
 
-    return arranged.mapInArrow(_stream, schema=BLOB_SCHEMA)
+    return arranged.mapInArrow(_encode, schema=BLOB_SCHEMA)
+
+
+def _group_starts(batch, keys: list[str]) -> np.ndarray:
+    """Row offsets where each run of equal ``keys`` values begins (nulls
+    equal each other, as in the sort that made the runs)."""
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for k in keys:
+        col = batch.column(batch.schema.get_field_index(k))
+        a, b = col.slice(1), col.slice(0, n - 1)
+        ne = pc.fill_null(pc.not_equal(a, b), False)
+        if col.null_count:
+            ne = pc.or_(ne, pc.not_equal(pc.is_null(a), pc.is_null(b)))
+        change[1:] |= ne.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change)
+
+
+def _whole_groups(batches, keys: list[str]):
+    """Regroup an Arrow batch stream whose ``keys`` groups are contiguous
+    runs into batches that hold only whole groups.
+
+    Yields ``(batch, starts)`` with each group's first row offset
+    (``starts[0] == 0``). A group may straddle an input batch boundary,
+    so every batch's trailing group is held back and prepended to the
+    next batch; the last one is flushed when the stream ends.
+    """
+    import pyarrow as pa
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]) \
+                .combine_chunks().to_batches()[0]
+        starts = _group_starts(batch, keys)
+        last = int(starts[-1])
+        carry = batch.slice(last)
+        if last:
+            yield batch.slice(0, last), starts[:-1]
+    if carry is not None:
+        yield carry, _group_starts(carry, keys)
+
+
+def _blob_batch(ids, tiers, chunks, ts_us, vals, starts):
+    """One ``BLOB_SCHEMA`` record batch: group ``g`` has keys
+    ``(ids[g], tiers[g], chunks[g])`` and the time-sorted points
+    ``ts_us/vals[starts[g]:starts[g+1]]``; every blob of the batch comes
+    from ONE ``gorilla_encode_multi`` call, which stores whole seconds.
+    ``count``/``min_ts``/``max_ts`` are the envelope the read path prunes
+    on."""
+    import pyarrow as pa
+    dat, offs = gorilla_encode_multi(ts_us // 1_000_000, vals, starts)
+    offs32 = pa.array(offs).cast(pa.int32())   # raises past 2 GiB per batch
+    blob = pa.Array.from_buffers(pa.binary(), len(starts),
+                                 [None, offs32.buffers()[1], pa.py_buffer(dat)])
+    ends = np.append(starts[1:], len(ts_us))
+
+    def us(a):
+        return pa.array(a).cast(pa.int64()).cast(pa.timestamp("us"))
+
+    return pa.record_batch([
+        ids.cast(pa.string()), tiers.cast(pa.string()), us(chunks), blob,
+        pa.array(ends - starts).cast(pa.int32()),
+        us(ts_us[starts]), us(ts_us[ends - 1]),
+    ], names=["id", "tier", "chunk_start", "blob", "count", "min_ts",
+              "max_ts"])
 
 
 def _blob_buffers(batch):

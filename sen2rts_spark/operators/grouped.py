@@ -15,32 +15,27 @@ runs that straddle batch boundaries. Output equals applyInPandas (tested).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..session import task_partitions
+
 __all__ = ["grouped_apply"]
 
 
 def grouped_apply(df: DataFrame, keys: list[str], fn: Callable, schema: str,
-                  order: list[str] | None = None,
-                  num_partitions: int | None = None) -> DataFrame:
+                  order: list[str] | None = None) -> DataFrame:
     """Apply ``fn(pdf) -> pdf`` once per distinct ``keys`` group.
 
     ``order``: optional within-group sort columns (groups arrive to ``fn``
     sorted by ``keys + order``).
     """
-    # 3 tasks/core (standard sizing) — straggler/steal mitigation; groups are
-    # small relative to partitions so the extra splits don't fragment runs.
-    # Cluster deployments can retune without code edits via
-    # SPARK_GRAFT_GROUP_PARTS_PER_CORE (VERDICT r7 task 8).
-    per_core = int(os.environ.get("SPARK_GRAFT_GROUP_PARTS_PER_CORE", "3"))
-    parts = num_partitions or \
-        per_core * df.sparkSession.sparkContext.defaultParallelism
-    arranged = df.repartition(parts, *keys) \
+    # groups are small relative to partitions, so the per-core task split
+    # does not fragment runs
+    arranged = df.repartition(task_partitions(df.sparkSession), *keys) \
         .sortWithinPartitions(*(keys + (order or [])))
 
     def _stream(batches):

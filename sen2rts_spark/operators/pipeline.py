@@ -22,6 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import task_partitions
 from .extract import extract_obs
 from .gorilla_sink import encode_blobs
 from .rollup import rollup_raw
@@ -30,15 +31,11 @@ __all__ = ["rollup_gorilla_pipeline"]
 
 
 def rollup_gorilla_pipeline(pages: DataFrame, tier: str = "daily",
-                            fused: bool = True,
-                            tasks_per_core: int = 3) -> DataFrame:
+                            fused: bool = True) -> DataFrame:
     """pages → blob table for ``tier``, ready to write (one blob per
-    (id, chunk)). ``tasks_per_core`` sizes the single fused exchange
-    (straggler smoothing, same 3×-parallelism default as the sink)."""
-    parts = None
-    if fused:
-        sc = pages.sparkSession.sparkContext
-        parts = tasks_per_core * sc.defaultParallelism
+    (id, chunk)). The single fused exchange has the standard per-core
+    task count (session.task_partitions), as the sink's own exchange."""
+    parts = task_partitions(pages.sparkSession) if fused else None
     obs = extract_obs(pages, partition_by_id=parts).select(
         "id", F.col("date").cast("timestamp").alias("ts"), "value", "qa")
     tier_df = rollup_raw(obs, tier)

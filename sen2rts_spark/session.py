@@ -11,7 +11,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "prewarm_python_workers"]
+__all__ = ["get_spark", "prewarm_python_workers", "TASKS_PER_CORE",
+           "task_partitions"]
+
+# 3 tasks per core (the standard Spark sizing guidance): finer granularity
+# lets the scheduler route around stalled/stolen cores — with 1 task/core
+# ANY straggler extends every stage barrier by its full stall. Measured on
+# the 24M-point pipeline: 50.3 s -> 37.6 s at local[32], 85.7 -> 75.8 s at
+# local[8]. AQE still coalesces post-shuffle partitions where they end up
+# small.
+TASKS_PER_CORE = 3
+
+
+def task_partitions(spark) -> int:
+    """Partition count for an explicit repartition: TASKS_PER_CORE tasks
+    per core of the session."""
+    return TASKS_PER_CORE * spark.sparkContext.defaultParallelism
 
 
 def prewarm_python_workers(spark, n_workers: int | None = None) -> float:
@@ -71,13 +86,7 @@ def get_spark(app: str = "sen2rts_spark", cores: int | None = None,
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     if shuffle_partitions is None:
-        # 3 tasks per core (the standard Spark sizing guidance): finer
-        # granularity lets the scheduler route around stalled/stolen cores —
-        # with 1 task/core ANY straggler extends every stage barrier by its
-        # full stall. Measured on the 24M-point pipeline: 50.3 s -> 37.6 s
-        # at local[32], 85.7 -> 75.8 s at local[8]. AQE still coalesces
-        # post-shuffle partitions where they end up small.
-        shuffle_partitions = max(3 * cores, 12)
+        shuffle_partitions = max(TASKS_PER_CORE * cores, 12)
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{cores}]")

@@ -173,3 +173,26 @@ def test_group_straddles_arrow_batches(spark):
     assert all(len(v) == 1 for v in per_group.values()), per_group
     pts = decode_blobs(spark.createDataFrame(rows, compacted.schema))
     assert pts.count() == 2 * 45
+
+
+def test_sink_group_straddles_arrow_batches(spark):
+    """The sink's run walker carries a group across Arrow batch
+    boundaries: with maxRecordsPerBatch=2 every (id, chunk) group spans
+    several batches, and the blobs must equal the default batch size's
+    byte for byte."""
+    tier = _tier(spark, n_ids=5, days=50).unionByName(
+        _tier(spark, n_ids=2, days=1, seed=3).withColumn(
+            "id", F.concat(F.lit("one-"), "id")))  # single-point groups
+    default = sorted(encode_blobs(tier, "daily", chunk_days=45).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "2")
+        small = sorted(encode_blobs(tier, "daily", chunk_days=45).collect())
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert len(default) == 5 * 2 + 2
+    assert small == default

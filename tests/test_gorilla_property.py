@@ -1,9 +1,10 @@
 """Property tests for the Gorilla codec: roundtrip over adversarial inputs.
 
-Hypothesis drives both encoder paths (per-point for n < 192, vectorized
-above) across NaN/Inf payloads, negative and duplicate-free timestamps,
-constant runs and sign flips — decode(encode(x)) must be bit-exact (NaN
-compared on the uint64 view, so payload bits count too).
+Hypothesis drives the encoder across NaN/Inf payloads, negative and
+duplicate-free timestamps, constant runs and sign flips, on both sides of
+the decoder's per-point/run-batched seam (192 points) — decode(encode(x))
+must be bit-exact (NaN compared on the uint64 view, so payload bits count
+too).
 """
 
 import numpy as np
@@ -103,18 +104,6 @@ def test_multi_roundtrip_mixed_groups(seed, ngroups):
                               np.asarray(vals, np.float64).view(np.uint64))
 
 
-def test_multi_byte_identical_to_single_for_large_groups():
-    # same window policy as gorilla_encode's vectorized path -> same bytes
-    rng = np.random.default_rng(3)
-    groups = []
-    for n in (192, 366, 2048):
-        ts = np.cumsum(rng.integers(1, 5000, n))
-        groups.append((ts, rng.normal(0, 1, n)))
-    for blob, (ts, vals) in zip(_multi_groups(groups), groups):
-        assert blob == gorilla_encode(np.asarray(ts, np.int64),
-                                      np.asarray(vals, np.float64))
-
-
 def test_multi_edge_groups():
     # single-point groups, constant-value groups (no '11' window token),
     # and a group whose token bits land exactly on a byte boundary
@@ -148,7 +137,7 @@ def test_decode_multi_equals_scalar(seed, nblobs):
     """Lockstep decoder == per-blob decoder, bit-exact, over mixed blob
     classes: empty/single-point blobs, all-repeat values, NaN payload bits,
     irregular and regular cadences, class-4 (64-bit) delta-of-deltas,
-    and BOTH encoder paths (scalar < _SMALL_N, vectorized above)."""
+    and blob sizes on both sides of gorilla_decode's 192-point seam."""
     rng = np.random.default_rng(seed)
     blobs, series = [], []
     for i in range(nblobs):

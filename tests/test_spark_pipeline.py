@@ -176,3 +176,36 @@ def test_gorilla_blob_roundtrip_spark(spark):
     a = {(r["id"], r["bucket_start"]): r["value"] for r in daily.collect()}
     b = {(r["id"], r["bucket_start"]): r["value"] for r in back.collect()}
     assert a == b  # bit-exact (dict equality on float values)
+
+
+def test_unparseable_pages_are_dropped(spark):
+    """A page whose metric does not parse (``ndvi=n/a``) and a page with no
+    ``class=`` field must not fail the ingest job under ANSI casts: the
+    unparseable page is dropped, every other page is stored."""
+    from sen2rts_spark.operators.gorilla_sink import decode_blobs
+    from sen2rts_spark.operators.pipeline import rollup_gorilla_pipeline
+
+    t0 = datetime.datetime(2024, 3, 1, 10, 0)
+    rows, expect = [], {}
+    for u in range(3):
+        for d in range(4):
+            ndvi = round(0.1 * u + 0.05 * d, 4)
+            fields = f"source=R{u} sensor=S2A class=4 cld=10 ndvi={ndvi}"
+            if (u, d) == (1, 2):
+                fields = "source=R1 sensor=S2A class=4 cld=10 ndvi=n/a"
+            elif (u, d) == (2, 3):
+                fields = f"source=R2 sensor=S2A cld=10 ndvi={ndvi}"
+            if "n/a" not in fields:
+                expect[(f"u{u}", d)] = ndvi
+            html = f"<html><body><p>{fields}</p></body></html>"
+            rows.append((f"u{u}", t0 + datetime.timedelta(days=d),
+                         bytearray(html.encode())))
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary")
+    got = {(r["id"], (r["bucket_start"] - t0.replace(hour=0)).days):
+           r["value"]
+           for r in decode_blobs(
+               rollup_gorilla_pipeline(pages, "daily")).collect()}
+    assert set(got) == set(expect)
+    for k, v in expect.items():
+        assert got[k] == pytest.approx(v, abs=1e-9), k
